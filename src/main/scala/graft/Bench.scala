@@ -250,9 +250,12 @@ object Bench {
     // quiet record survives. Same formula as SuiteTimeLintSpec so the
     // two can never disagree about a map already written.
     // Two independent signals, either quarantines the sweep:
-    // (a) mean hot relative to the median-implied machine speed (the
-    //     lint's formula — catches sustained co-tenancy that fattens
-    //     the tail), and
+    // (a) mean hot relative to the median-implied machine speed, or
+    //     above the lint's absolute 1.75 s ceiling (the lint's two
+    //     bounds — the relative one catches sustained co-tenancy that
+    //     fattens the tail; the absolute one catches uniform
+    //     contention, which inflates the median along with the mean),
+    //     and
     // (b) hypervisor steal over the timed loop (catches the BURST
     //     shape (a) misses: this box's r16 crater inflated ~15
     //     alphabetically-adjacent queries 5-10× while the suite
@@ -266,18 +269,18 @@ object Bench {
     val contended = (okTimes.nonEmpty && {
       val mean = okTimes.sum / okTimes.size
       val med = okTimes.sorted.apply(okTimes.size / 2)
-      mean > 1.15 * (med / 0.65)
+      mean > 1.15 * (med / 0.65) || mean > 1.75
     }) || stealFrac > 0.03
     if (fileOfRecord) {
       val name =
-        if (contended) "BENCH_LOCAL_contended.json"
+        if (contended && !fullWidth) s"BENCH_LOCAL_contended_c$cpus.json"
+        else if (contended) "BENCH_LOCAL_contended.json"
         else if (!fullWidth) s"BENCH_LOCAL_c$cpus.json"
         else "BENCH_LOCAL.json"
       if (contended)
-        System.err.println("[bench] contention detected (mean-vs-median " +
-          f"or steal ${100 * stealFrac}%.1f%%) — writing " +
-          "BENCH_LOCAL_contended.json and keeping the existing quiet " +
-          "file of record")
+        System.err.println("[bench] contention detected (mean-vs-median, " +
+          f"mean ceiling or steal ${100 * stealFrac}%.1f%%) — writing " +
+          s"$name and keeping the existing quiet file of record")
       else if (!fullWidth)
         System.err.println(s"[bench] reduced-width run (cpus=$cpus) — " +
           s"writing BENCH_LOCAL_c$cpus.json, not the file of record")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.store.TableDir
 
 /** JVM-level cache of graftlog ingest fixtures shared across the
   * query registry. A dozen registry queries exercise the DSv2
@@ -48,7 +49,7 @@ object GlogFixtures {
         val name =
           s"shared_${key}_${math.abs(dir.hashCode).toHexString}"
         val out = Paths.get(CatBase, name)
-        rm(out)
+        TableDir.deleteTree(out)
         Files.createDirectories(out.getParent)
         build(out.toString)
         out.toString
@@ -106,7 +107,7 @@ object GlogFixtures {
     * query gets a private table: the ingest happens once per JVM,
     * every consumer after that pays a file copy, not a Spark job. */
   def freshCopyInto(sharedPath: String, target: Path): Unit = {
-    rm(target)
+    TableDir.deleteTree(target)
     Files.createDirectories(target)
     val s = Files.list(Paths.get(sharedPath))
     try s.iterator().asScala.filter(Files.isRegularFile(_)).foreach(f =>
@@ -147,14 +148,6 @@ object GlogFixtures {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
 
-  private def rm(p: Path): Unit =
-    if (Files.isDirectory(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
-
   /** Remove every mutating-query fixture CLONE (the freshCopyInto
     * targets), keeping the shared_* read-only fixtures. Bench calls
     * this between queries: accumulated clones are dirty pages the
@@ -164,8 +157,9 @@ object GlogFixtures {
     if (!Files.isDirectory(base)) return
     val l = Files.list(base)
     try l.iterator().asScala.toSeq
-      .filterNot(_.getFileName.toString.startsWith("shared_"))
-      .foreach(rm)
+      .filter(p => Files.isDirectory(p) &&
+        !p.getFileName.toString.startsWith("shared_"))
+      .foreach(TableDir.deleteTree)
     finally l.close()
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.store.TableDir
 
 /** JVM-level cache of the purchase-graph edge frames shared across
   * the graph-query family (the GlogFixtures discipline applied to
@@ -88,7 +89,7 @@ object GraphFixtures {
       built.getOrElseUpdate(s"$dir|$sig|$key", {
         val out = Paths.get(FixBase,
           s"${key}_${math.abs(s"$dir|$sig".hashCode).toHexString}")
-        rm(out)
+        TableDir.deleteTree(out)
         build.write.parquet(out.toString)
         out.toString
       })
@@ -96,11 +97,6 @@ object GraphFixtures {
     val df = s.read.parquet(path)
     if (fanout) Q.fanout(df) else df
   }
-
-  private def rm(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
 
   /** Customer↔supplier purchase pairs WITH multiplicity — one row per
     * (order, supplier) lineitem pairing; supplier ids offset by 1e6

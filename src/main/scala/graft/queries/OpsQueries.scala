@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.store.TableDir
 import graft.text.TextFunctions
 
 /** Operational-diagnostics and lakehouse-lifecycle operators — the
@@ -970,11 +971,7 @@ object OpsQueries {
       val srcTbl = GlogFixtures.tableName(src)
       val devTbl = s"mx${runId.incrementAndGet()}"
       val devDir = java.nio.file.Paths.get(GlogFixtures.CatBase, devTbl)
-      if (java.nio.file.Files.isDirectory(devDir)) { // prior-JVM leftover
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(devDir).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      TableDir.deleteTree(devDir) // prior-JVM leftover
       val linked = s.sql(
         s"CALL glog.clone(src => '$srcTbl', dst => '$devTbl')")
         .as[Int].head()
@@ -1051,11 +1048,7 @@ object OpsQueries {
         .get(s"${GlogFixtures.CatBase}/clone${runId.incrementAndGet()}")
       // clear a leftover from a PRIOR JVM (runIds restart per JVM;
       // shallowClone itself refuses a non-empty destination)
-      if (java.nio.file.Files.isDirectory(dst)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dst).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      TableDir.deleteTree(dst)
       graft.sources.GraftLog.shallowClone(src, dst.toString)
       // clone-only append: the first 100 events re-ingested
       Tables.table(s, dir, "events")
@@ -1236,13 +1229,7 @@ object OpsQueries {
       val id = runId.incrementAndGet()
       val dst = java.nio.file.Paths.get(GlogFixtures.CatBase, s"ssink$id")
       val cp = java.nio.file.Paths.get(GlogFixtures.CatBase, s"sscp$id")
-      Seq(dst, cp).foreach { p =>
-        if (java.nio.file.Files.isDirectory(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
+      Seq(dst, cp).foreach(TableDir.deleteTree)
       def drain(): Unit = {
         val q = s.readStream.format(fmt)
           .option("maxShardsPerTrigger", 2).load(src)
@@ -1306,13 +1293,7 @@ object OpsQueries {
         s"${GlogFixtures.CatBase}/cdfs${id}_batches")
       val cp = java.nio.file.Paths.get(
         s"${GlogFixtures.CatBase}/cdfs${id}_cp")
-      Seq(stage, cp).foreach { p =>
-        if (java.nio.file.Files.isDirectory(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
+      Seq(stage, cp).foreach(TableDir.deleteTree)
       val n = Tables.table(s, dir, "events").count()
       val tok0 = graft.sources.GraftLog.currentVersion(log)
       def appendShifted(lo: Long, hi: Long): Unit =
@@ -1489,12 +1470,7 @@ object OpsQueries {
       val dst = s"${GlogFixtures.CatBase}/$dstT"
       // clear a leftover from a PRIOR JVM (runIds restart per JVM;
       // shallowClone refuses a non-empty destination — the q330 rule)
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dst))) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(dst))
-          .iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      TableDir.deleteTree(java.nio.file.Paths.get(dst))
       val n = Tables.table(s, dir, "events").count()
       val tok0 = graft.sources.GraftLog.currentVersion(src)
       // bootstrap the replica as a ZERO-COPY shallow clone of the
@@ -3223,8 +3199,8 @@ object OpsQueries {
     // end to end: a per-user latest-event state table (the q112 CDC
     // fold, one-shot here) has an erasure list (user_id % 37 = 0 —
     // a stand-in for the day's deletion requests) propagated through
-    // Retention.forget: broadcast anti-join rewrite with the
-    // two-rename atomic swap. The verified output is the surviving
+    // Retention.forget: broadcast anti-join rewrite with TableDir's
+    // staged two-rename swap. The verified output is the surviving
     // state's per-type census PLUS the erasure audit row (subjects
     // erased / rows removed riding as literal columns) — the oracle
     // recomputes both from the raw log, so the rewrite provably

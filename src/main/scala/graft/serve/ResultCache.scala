@@ -1,10 +1,12 @@
 package graft.serve
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.store.TableDir
 
 /** Plan-fingerprint result cache — the serving-layer memoization every
   * query engine with a dashboard in front of it grows (Presto/Trino
@@ -32,12 +34,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * source I/O; a miss pays one extra result write, amortized across
   * every later hit. The input-listing stat is driver-side O(#files)
   * metadata work — the same class as split planning, which the query
-  * pays anyway. Atomic visibility follows the store.Merge discipline:
-  * results are written to a UNIQUE tmp dir and renamed in with
-  * ATOMIC_MOVE, so a concurrent reader sees the old entry or the new
-  * one, never a partial file, and two racing misses for the same key
-  * cannot interleave writes into one tmp dir (one rename wins, the
-  * loser deletes its tmp).
+  * pays anyway. Atomic visibility is store.TableDir.publish: results
+  * are written to a UNIQUE tmp dir and renamed in with ATOMIC_MOVE,
+  * so a concurrent reader sees the old entry or the new one, never a
+  * partial file, and two racing misses for the same key cannot
+  * interleave writes into one tmp dir (one rename wins, the loser
+  * deletes its tmp).
   */
 object ResultCache {
 
@@ -86,45 +88,10 @@ object ResultCache {
         s"_tmp_${fp}_${java.util.UUID.randomUUID().toString.take(8)}")
       df.write.mode("overwrite").parquet(tmp.toString)
       Files.createDirectories(path.getParent)
-      if (!promote(tmp, path)) deleteRecursively(tmp)
+      if (!TableDir.publish(tmp, path)) TableDir.deleteTree(tmp)
     }
     spark.read.parquet(path.toString)
   }
-
-  /** Atomically rename `tmp` into `dst`; false = lost the race (an
-    * equal entry is already live — same fingerprint ⇒ same bytes).
-    * On Linux, rename(2) onto an existing non-empty directory fails
-    * with ENOTEMPTY, which the JDK surfaces as
-    * DirectoryNotEmptyException (not FileAlreadyExistsException) — so
-    * a lost race is ANY rename failure where the winner's entry is
-    * live (`dst/_SUCCESS` exists). Only a failure with no live entry
-    * is a real error worth surfacing. */
-  private def promote(tmp: Path, dst: Path): Boolean = {
-    def lostRace(e: java.nio.file.FileSystemException): Boolean =
-      e.isInstanceOf[java.nio.file.FileAlreadyExistsException] ||
-        e.isInstanceOf[java.nio.file.DirectoryNotEmptyException] ||
-        Files.exists(dst.resolve("_SUCCESS"))
-    try { Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE); true }
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        // same-volume local rename supports ATOMIC_MOVE; a cache dir
-        // on a filesystem that doesn't gets the plain-rename fallback
-        // (still all-or-nothing for directories on POSIX)
-        try { Files.move(tmp, dst); true }
-        catch {
-          case e2: java.nio.file.FileSystemException if lostRace(e2) =>
-            false
-        }
-      case e: java.nio.file.FileSystemException if lostRace(e) => false
-    }
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
-    }
 
   /** True iff a cache entry for `df` is already present (spec hook). */
   def isCached(cacheDir: String, df: DataFrame): Boolean =

@@ -10,6 +10,8 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.store.TableDir
+
 /** Session-catalog plugin exposing `.graftlog` shard directories as
   * SQL-addressable V2 tables — the piece that turns the connector
   * from a path-based `spark.read.format(...)` source into a named
@@ -217,10 +219,7 @@ class GraftLogCatalog extends TableCatalog
     else {
       // recursive: a rewritten table carries _history/_retired
       // subdirectories (snapshot retention, r11)
-      val walk = Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
+      TableDir.deleteTree(dir)
       true
     }
   }

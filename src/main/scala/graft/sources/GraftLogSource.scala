@@ -20,6 +20,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.store.TableDir
+
 /** DataSource V2 connector for the `.graftlog` shard format — the
   * last custom-extension tier (after codegen Expressions, typed
   * aggregates, an optimizer Rule, and a custom SparkPlan): a
@@ -1285,12 +1287,7 @@ object GraftLog {
         Files.isDirectory(d) &&
         (try Files.getLastModifiedTime(d).toMillis < cutoff
          catch { case _: java.io.IOException => false })
-    }.toSeq).foreach { d =>
-      val w = Files.walk(d)
-      try w.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { Files.deleteIfExists(f); removed += 1 })
-      finally w.close()
-    }
+    }.toSeq).foreach(d => removed += TableDir.deleteTree(d))
     removed
   }
 
@@ -3587,15 +3584,6 @@ object GraftLog {
     // staging; the loser's dir is removed on its own conflict path
     val tmp = path + "__compact_tmp-" +
       java.util.UUID.randomUUID().toString.take(8)
-    def rmdir(d: String): Unit = {
-      val p = Paths.get(d)
-      if (Files.isDirectory(p)) { // recursive: staging carries _commits
-        val w = Files.walk(p)
-        try w.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.delete(f))
-        finally w.close()
-      }
-    }
     // an evolved table compacts with its added columns intact: the
     // staging dir carries the same extension file, so the V2 write
     // resolves (and serializes) the full schema
@@ -3629,10 +3617,10 @@ object GraftLog {
         // lost the optimistic race: drop this attempt's staging so
         // the retry starts clean (claims stay — indices never reuse)
         promotes.foreach(p => Files.deleteIfExists(Paths.get(path, p._1)))
-        rmdir(tmp)
+        TableDir.deleteTree(Paths.get(tmp))
         throw e
     }
-    rmdir(tmp)
+    TableDir.deleteTree(Paths.get(tmp))
     (before, staged.size)
   }
 
@@ -3690,16 +3678,6 @@ object GraftLog {
         "implicit first)")
     retryOnConflict(s"cluster($path)")(
       clusterZOnce(spark, path, shards, dims))
-  }
-
-  private def rmStageDir(d: String): Unit = {
-    val p = Paths.get(d)
-    if (Files.isDirectory(p)) {
-      val w = Files.walk(p)
-      try w.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally w.close()
-    }
   }
 
   /** Validate the key columns and measure their domains over `df`.
@@ -3820,10 +3798,10 @@ object GraftLog {
     catch {
       case e: GraftLogConcurrentWriteException =>
         promotes.foreach(p => Files.deleteIfExists(Paths.get(path, p._1)))
-        rmStageDir(tmp)
+        TableDir.deleteTree(Paths.get(tmp))
         throw e
     }
-    rmStageDir(tmp)
+    TableDir.deleteTree(Paths.get(tmp))
     recordClusterState(path, keys, bits, doms, promotes.map(_._2),
       replace = true)
     (before, promotes.size)
@@ -3925,7 +3903,7 @@ object GraftLog {
       recordClusterState(path, keys, bits, doms, promotes.map(_._2),
         replace = false)
       (fresh.size, promotes.size)
-    } finally { rmStageDir(tmp); rmStageDir(src) }
+    } finally Seq(tmp, src).foreach(d => TableDir.deleteTree(Paths.get(d)))
   }
 
   /** Bin-packing OPTIMIZE (Delta's small-file compaction, distinct

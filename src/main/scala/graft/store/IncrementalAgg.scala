@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * The merge is a full-outer union-aggregate: old state and the
   * increment's partial aggregate are unioned and re-aggregated on the
   * keys — one shuffle of (|keys| + |increment keys|) AGGREGATED rows,
-  * never raw facts. Persistence uses the same staged-swap discipline
-  * as [[Merge]] (readers see old or new, modulo the rename window).
+  * never raw facts. Persistence is [[TableDir.replace]]'s staged swap,
+  * like [[Merge]] (readers see old or new, modulo the rename window).
   */
 object IncrementalAgg {
 
@@ -49,29 +49,10 @@ object IncrementalAgg {
       .agg(spec.mergeCols.head, spec.mergeCols.tail: _*)
 
   /** Refresh the stored aggregate table at `path` with `increment`
-    * (raw rows): read old state if present, merge, staged swap. */
+    * (raw rows): merge into the old state if present, staged swap. */
   def refresh(spark: SparkSession, path: String, increment: DataFrame,
       spec: Spec): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val incAgg = aggregate(increment, spec)
-    val merged =
-      if (fs.exists(p)) merge(spark.read.parquet(path), incAgg, spec)
-      else incAgg
-    val tmp = path + "__agg_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    val old = new Path(path + "__agg_old")
-    fs.delete(old, true)
-    if (fs.exists(p) && !fs.rename(p, old)) {
-      fs.delete(new Path(tmp), true)
-      throw new IllegalStateException(s"aggregate swap failed for $path")
-    }
-    if (!fs.rename(new Path(tmp), p)) {
-      fs.rename(old, p)
-      fs.delete(new Path(tmp), true)
-      throw new IllegalStateException(s"aggregate swap failed for $path")
-    }
-    fs.delete(old, true)
+    TableDir.replace(spark, path)(_.fold(incAgg)(merge(_, incAgg, spec)))
   }
 }

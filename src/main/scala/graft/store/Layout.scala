@@ -70,51 +70,40 @@ object Layout {
     * slower to scan than ten thousand 128 MB ones, and small row
     * groups defeat min/max skipping. Bin-packs a flat parquet
     * directory to ⌈total/targetFileBytes⌉ files via one round-robin
-    * repartition (uniform output sizes), staging to a temp dir and
-    * swapping. FLAT directories only — a hive-partitioned table must
-    * be compacted per partition directory (a whole-table rewrite
-    * would flatten the partition columns into data and lose pruning);
-    * a directory with subdirectories is rejected up front.
+    * repartition (uniform output sizes), committed by
+    * [[TableDir.replace]]'s staged swap. FLAT directories only — a
+    * hive-partitioned table must be compacted per partition directory
+    * (a whole-table rewrite would flatten the partition columns into
+    * data and lose pruning); a directory with subdirectories is
+    * rejected before anything is written.
     *
     * The swap is two renames: a reader racing it can observe a brief
     * missing-directory window, and a crash between the renames leaves
-    * the data at `path__compact_old` (single-writer maintenance op;
-    * Delta/Iceberg close this window with a metadata commit — without
-    * a table format, two renames is the honest best). Returns the new
-    * file count. */
+    * the data at the table's parked generation, restored on the next
+    * call (single-writer maintenance op; Delta/Iceberg close this
+    * window with a metadata commit — without a table format, two
+    * renames is the honest best). Returns the new file count. */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFileBytes: Long): Int = {
     require(targetFileBytes >= 1, s"targetFileBytes=$targetFileBytes")
     import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = fs.listStatus(p)
-    require(!entries.exists(e => e.isDirectory &&
-        !e.getPath.getName.startsWith("_")),
-      s"compact() is for FLAT parquet dirs; $path has partition " +
-        "subdirectories — compact each partition directory instead")
-    val total = entries
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen).sum
-    val n = math.max(1, math.ceil(total.toDouble / targetFileBytes).toInt)
-    val tmp = new Path(path + "__compact_tmp")
-    val old = new Path(path + "__compact_old")
-    spark.read.parquet(path).repartition(n)
-      .write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(old, true)
-    if (!fs.rename(p, old)) {
-      fs.delete(tmp, true) // don't leak the staged copy
-      throw new IllegalStateException(s"compaction swap failed for $path")
+    var n = 0
+    TableDir.replace(spark, path) { live =>
+      val t = live.getOrElse(
+        throw new IllegalArgumentException(s"compact: no table at $path"))
+      val p = new Path(path)
+      val entries = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(p)
+      require(!entries.exists(e => e.isDirectory &&
+          !e.getPath.getName.startsWith("_")),
+        s"compact() is for FLAT parquet dirs; $path has partition " +
+          "subdirectories — compact each partition directory instead")
+      val total = entries
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+        .map(_.getLen).sum
+      n = math.max(1, math.ceil(total.toDouble / targetFileBytes).toInt)
+      t.repartition(n)
     }
-    if (!fs.rename(tmp, p)) {
-      val restored = fs.rename(old, p) // restore the original layout
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        if (restored) s"compaction swap failed for $path (original restored)"
-        else s"compaction swap failed for $path AND restore failed — " +
-          s"data is at ${path}__compact_old, recover manually")
-    }
-    fs.delete(old, true)
     n
   }
 

@@ -1,6 +1,6 @@
 package graft.store
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * etl-s3-processed-to-redshift.py:58-96) re-expressed as a Spark
   * plan: dedup the batch on its keys, anti-join the target against
   * the batch, union. No Delta on the classpath, so the durable form
-  * rewrites the parquet table via a temp-dir + atomic rename
-  * (SURVEY.md §2.4 J1–J3, §7.3).
+  * rewrites the parquet table through [[TableDir.replace]]'s staged
+  * swap (SURVEY.md §2.4 J1–J3, §7.3).
   *
   * Scale notes (100 TB): the batch side is one micro-batch — small —
   * so it is broadcast for both the dedup-free anti-join and the
@@ -49,22 +49,17 @@ object Merge {
       .unionByName(dedupBatch.select(target.columns.map(col).toIndexedSeq: _*))
   }
 
-  /** Durable merge into a parquet table directory. Writes the merged
-    * result to `<table>.tmp`, then swaps directories — the closest to
+  /** Durable merge into a parquet table directory: the merged result
+    * is staged and swapped in by [[TableDir.replace]] — the closest to
     * atomic replace a plain filesystem offers (SURVEY.md §7.3).
     */
   def mergeIntoParquet(
       spark: SparkSession, tableDir: String, batch: DataFrame,
-      keys: Seq[String], precedence: Seq[Column] = Nil): Unit = {
-    val dir = Paths.get(tableDir)
-    val merged =
-      if (Files.exists(dir))
-        merge(spark.read.parquet(tableDir), batch, keys, precedence)
-      else dedupKeyed(batch, keys, precedence)
-    val tmp = tableDir + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    swap(Paths.get(tmp), dir)
-  }
+      keys: Seq[String], precedence: Seq[Column] = Nil): Unit =
+    TableDir.replace(spark, tableDir) {
+      case Some(t) => merge(t, batch, keys, precedence)
+      case None => dedupKeyed(batch, keys, precedence)
+    }
 
   /** Precedence-respecting durable merge: unlike [[mergeIntoParquet]]
     * (latest-BATCH-wins — the reference's Redshift semantics, correct
@@ -81,15 +76,9 @@ object Merge {
     require(precedence.nonEmpty,
       "precedence merge needs an explicit ordering; use mergeIntoParquet " +
         "for latest-batch-wins")
-    val dir = Paths.get(tableDir)
-    val merged =
-      if (Files.exists(dir))
-        dedupKeyed(spark.read.parquet(tableDir).unionByName(batch),
-          keys, precedence)
-      else dedupKeyed(batch, keys, precedence)
-    val tmp = tableDir + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    swap(Paths.get(tmp), dir)
+    TableDir.replace(spark, tableDir) { live =>
+      dedupKeyed(live.fold(batch)(_.unionByName(batch)), keys, precedence)
+    }
   }
 
   /** Partition-scoped durable merge: only partitions present in the
@@ -118,19 +107,4 @@ object Merge {
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
   }
-
-  private def swap(tmp: Path, dest: Path): Unit = {
-    val old = Paths.get(dest.toString + ".old")
-    deleteRecursively(old)
-    if (Files.exists(dest)) Files.move(dest, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(old)
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-    }
 }

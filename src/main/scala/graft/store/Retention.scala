@@ -19,55 +19,26 @@ import org.apache.spark.sql.SparkSession
 object Retention {
 
   /** Subject-key erasure — the right-to-be-forgotten rewrite: drop
-    * every row whose key appears in `keys`, atomically (stage → move
-    * old aside → move new in → drop old, the Layout.compact swap).
-    * The erasure list broadcasts (deletion requests are bounded; a
-    * bulk purge would drop the hint and let the anti-join shuffle).
-    * Unlike [[expire]] this IS a full rewrite — row-level deletes
-    * without a table format cost one scan of the table, which is the
-    * honest price; at 100 TB the standing pattern is to batch
-    * requests and fold them into the compaction/retention pass the
-    * lake already runs. Returns (rows before, rows removed). */
+    * every row whose key appears in `keys`, committed by
+    * [[TableDir.replace]]'s staged swap (a crash mid-swap is rolled
+    * back by the next call). The erasure list broadcasts (deletion
+    * requests are bounded; a bulk purge would drop the hint and let
+    * the anti-join shuffle). Unlike [[expire]] this IS a full rewrite
+    * — row-level deletes without a table format cost one scan of the
+    * table, which is the honest price; at 100 TB the standing pattern
+    * is to batch requests and fold them into the compaction/retention
+    * pass the lake already runs. Returns (rows before, rows removed). */
   def forget(spark: SparkSession, path: String, keyCol: String,
       keys: org.apache.spark.sql.DataFrame): (Long, Long) = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    import java.nio.file.{Files, Paths}
-    // crash recovery: a hard stop between the two renames below
-    // leaves the table absent with the data parked at __forget_old —
-    // restore it before doing anything else (roll BACK: the staged
-    // rewrite was never made live, so the old generation is truth)
-    if (!Files.isDirectory(Paths.get(path)) &&
-        Files.isDirectory(Paths.get(path + "__forget_old")))
-      Files.move(Paths.get(path + "__forget_old"), Paths.get(path),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    val t = spark.read.parquet(path)
-    val before = t.count()
-    val kept = t.join(broadcast(keys.select(col(keyCol)).distinct()),
-      Seq(keyCol), "left_anti")
-    val tmp = path + "__forget_tmp"
-    val old = path + "__forget_old"
-    kept.write.mode("overwrite").parquet(tmp)
-    def rm(d: String): Unit = {
-      val p = Paths.get(d)
-      if (Files.exists(p)) {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.delete(f))
-        finally walk.close()
-      }
+    var before = 0L
+    TableDir.replace(spark, path) { live =>
+      val t = live.getOrElse(
+        throw new IllegalArgumentException(s"forget: no table at $path"))
+      before = t.count()
+      t.join(broadcast(keys.select(col(keyCol)).distinct()),
+        Seq(keyCol), "left_anti")
     }
-    rm(old)
-    Files.move(Paths.get(path), Paths.get(old),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    try Files.move(Paths.get(tmp), Paths.get(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case e: Throwable =>
-        Files.move(Paths.get(old), Paths.get(path),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        throw e
-    }
-    rm(old)
     val after = spark.read.parquet(path).count()
     (before, before - after)
   }

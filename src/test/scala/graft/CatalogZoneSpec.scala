@@ -1,6 +1,6 @@
 package graft
 
-import graft.store.CatalogZone
+import graft.store.{CatalogZone, TableDir}
 
 /** Catalog persistence: crawled zone tables are EXTERNAL catalog
   * tables (not temp views), so they are visible from a brand-new
@@ -49,5 +49,18 @@ class CatalogZoneSpec extends SparkSuite {
     java.nio.file.Files.createDirectories(zone.resolve(".hidden"))
     java.nio.file.Files.writeString(zone.resolve("_SUCCESS"), "")
     assert(CatalogZone.discover(zone.toString) === Seq("t1"))
+  }
+
+  test("crawl skips the staged and parked siblings of an interrupted swap") {
+    val zone = tmpDir("catalog_zone3")
+    val live = zone.resolve("dim_swapped")
+    Seq((1L, "a")).toDF("id", "v").write.parquet(live.toString)
+    Seq((2L, "b")).toDF("id", "v")
+      .write.parquet(TableDir.staged(live).toString)
+    Seq((3L, "c")).toDF("id", "v")
+      .write.parquet(TableDir.parked(live).toString)
+    assert(CatalogZone.crawl(spark, zone.toString) === Seq("dim_swapped"))
+    assert(spark.sql("SELECT id FROM default.dim_swapped")
+      .as[Long].collect().toSeq === Seq(1L))
   }
 }

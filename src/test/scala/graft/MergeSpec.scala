@@ -1,6 +1,8 @@
 package graft
 
-import graft.store.Merge
+import java.nio.file.Files
+
+import graft.store.{Layout, Merge, Retention, TableDir}
 
 /** Merge contract (FIXTURES.md §A.5; reference semantics from
   * /root/reference/glue_jobs/etl-s3-processed-to-redshift.py:54-96):
@@ -65,5 +67,45 @@ class MergeSpec extends SparkSuite {
     assert(out.length === 3)
     assert(m("t1")._3 === 1, "untouched partition survives")
     assert(m("t2")._3 === 2 && m("t3")._3 === 2)
+  }
+
+  test("a table left only as its parked generation loses no prior row") {
+    // a JVM stop between TableDir.replace's two moves leaves the live
+    // directory absent and the last committed generation parked; the
+    // next rewrite of any kind must start from that generation
+    val prior = Seq(("k1", "v1", 1), ("k2", "v1", 1), ("k3", "v1", 1))
+    val cases: Seq[(String, String => Unit, Set[String])] = Seq(
+      ("mergeIntoParquet", dir => Merge.mergeIntoParquet(spark, dir,
+          Seq(("k4", "v2", 2)).toDF("id", "payload", "batch"), Seq("id")),
+        Set("k1", "k2", "k3", "k4")),
+      ("Retention.forget", dir => assert(
+          Retention.forget(spark, dir, "id", Seq("k2").toDF("id")) ===
+            ((3L, 1L)), "forget counts every prior row"),
+        Set("k1", "k3")),
+      ("Layout.compact", dir => Layout.compact(spark, dir, 1L << 20),
+        Set("k1", "k2", "k3")))
+    cases.foreach { case (name, call, expected) =>
+      val live = tmpDir("crash").resolve("dim_test")
+      prior.toDF("id", "payload", "batch")
+        .write.parquet(TableDir.parked(live).toString)
+      call(live.toString)
+      val ids = spark.read.parquet(live.toString)
+        .as[(String, String, Int)].collect().map(_._1)
+      assert(ids.sorted.toSeq === expected.toSeq.sorted, name)
+      assert(!Files.exists(TableDir.parked(live)),
+        s"$name: parked generation dropped after the commit")
+      assert(!Files.exists(TableDir.staged(live)),
+        s"$name: staged generation moved in")
+    }
+  }
+
+  test("deleteTree removes a tree leaves first and counts its entries") {
+    val root = tmpDir("tree").resolve("t")
+    Files.createDirectories(root.resolve("a/b"))
+    Files.writeString(root.resolve("a/b/f1"), "x")
+    Files.writeString(root.resolve("f2"), "y")
+    assert(TableDir.deleteTree(root) === 5L, "t, a, a/b, a/b/f1, f2")
+    assert(!Files.exists(root))
+    assert(TableDir.deleteTree(root) === 0L, "a missing tree is a no-op")
   }
 }
